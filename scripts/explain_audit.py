@@ -497,6 +497,31 @@ def main() -> None:
             ("no nested loop / cartesian", r"NestedLoop|CartesianProduct", False),
         ],
     )
+    # the INDEXED (incremental) funnel — the same corpus_stages with the
+    # three probe indexes funnel_probe_indexes derives from a run over
+    # the same input: the q48-lazy rules hold, and no non-outer explode
+    # of a derived array leaves its implicit size(..) > 0 guard Filter
+    # in the plan (anywhere, so in particular below any Exchange)
+    from xhs_ocr_spark.plans.corpus_pipeline import (
+        corpus_stages as _cs,
+        funnel_probe_indexes as _fpi,
+    )
+
+    _indexed = _cs(_dts(Q.queries()["q30_extract_flagship"](spark, SF)))
+    audit(
+        "q48_corpus_pipeline_indexed_lazy",
+        _cs(
+            _indexed["input"], indexes=_fpi(_indexed), stage_checkpoints=False
+        )["stratified_sample"],
+        [
+            ("no parquet scan above the base checkpoint", r"(?m)^\(\d+\) Scan parquet", False),
+            ("no python anywhere", r"EvalPython|MapInPandas", False),
+            ("paragraph dedup partial_min before shuffle", r"partial_min", True),
+            ("no window over fp", r"RunningWindowFunction|\(\d+\) Window", False),
+            ("no nested loop / cartesian", r"NestedLoop|CartesianProduct", False),
+            ("no explode size guard Filter", r"(?m)^Condition : \(+size\(", False),
+        ],
+    )
 
     print(f"\n{len(failures)} plan-invariant failures; plans in {OUT}/")
     spark.stop()

@@ -7,6 +7,7 @@ verdict item 7)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 
 from xhs_ocr_spark.plans.corpus_pipeline import (
@@ -207,3 +208,14 @@ def test_incremental_matches_full_rerun(spark):
     # docs -> corpus-side paragraph dedup drops nothing); if this breaks,
     # the probe assertions above go vacuous
     assert _texts(c_only["paragraph_dedup"]) == corpus
+
+
+def test_incremental_rejects_ids_out_of_string_order(spark):
+    # numerically 9 < 10, but the funnel's tie-breaks compare the string
+    # casts, where '9' > '10': the ingest-order precondition is violated
+    text = (
+        "the harbor lights flicker over calm water while fishermen mend "
+        "their nets and gulls wheel above the quiet pier"
+    )
+    with pytest.raises(ValueError, match="corpus ids < batch ids"):
+        incremental_batch_stages(_mk(spark, {"9": text}), _mk(spark, {"10": text}))

@@ -157,14 +157,6 @@ class _Engine:
 _OUT_COLS = ["doc_id", "kind", "text", "media_ref", "offset", "reason"]
 
 
-def _ocr_media(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    engine = _Engine.get()  # init BEFORE the batch loop; reused across batches
-    for pdf in batches:
-        out = pdf.copy()
-        out["text"], out["reason"] = engine.extract_batch(pdf["media_ref"])
-        yield out[_OUT_COLS]
-
-
 def _make_ocr_routed(masks_bc):
     """Unified-stream OCR stage factory: media rows get OCR'd (bytes path
     when the span carries a payload), text rows pass through untouched
@@ -231,41 +223,6 @@ def classify_text_expr(text_col) -> "F.Column":
         (F.size(ws) > 0) & (hits / F.size(ws) <= F.lit(BOILERPLATE_MAX_RATIO)),
         F.concat_ws(" ", ws),
     )
-
-
-def classify_text_route(flat_text: DataFrame) -> DataFrame:
-    """Row-level wrapper (standalone use): keep survivors, rewrite text."""
-    return flat_text.withColumn(
-        "text", classify_text_expr(F.col("text"))
-    ).where(F.col("text").isNotNull())
-
-
-def ocr_media_route(
-    flat_media: DataFrame,
-    spread_partitions: int | None = None,
-    keep_failures: bool = False,
-    pre_spread: bool = False,
-) -> DataFrame:
-    """Media spans through the batched OCR stage.
-
-    repartition by (doc_id, offset): each span is independent, so a
-    media-heavy document fans out across partitions instead of pinning one
-    executor (skew handling per north_star; AQE coalesces the tail).
-    ``pre_spread=True`` skips it — the extract_spans* pipelines already
-    spread ALL spans behind the single shared exchange.
-
-    ``keep_failures=False`` drops all-masks-failed spans (the reference
-    logs and skips, core/run.py:499-501); ``True`` keeps them with NULL
-    text so callers can route them to a dead-letter table."""
-    if pre_spread:
-        spread = flat_media
-    else:
-        parts = spread_partitions or flat_media.sparkSession.sparkContext.defaultParallelism * 2
-        spread = flat_media.repartition(parts, "doc_id", "offset")
-    done = spread.mapInPandas(_ocr_media, schema=_FLAT_SCHEMA)
-    if keep_failures:
-        return done
-    return done.where(F.col("text").isNotNull())  # F10 dead-letter drop
 
 
 def reassemble(extracted_flat: DataFrame) -> DataFrame:

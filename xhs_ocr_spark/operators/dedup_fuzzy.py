@@ -806,7 +806,11 @@ def paragraph_dedup(
 
 
 def paragraph_dedup_rebuild(
-    df: DataFrame, id_col: str, text_col: str, size: int = 4
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    size: int = 4,
+    seen: DataFrame | None = None,
 ) -> DataFrame:
     """paragraph_dedup, but returning the REBUILT documents: (doc_id,
     text) where text is the doc's first-occurrence paragraphs re-joined
@@ -816,7 +820,11 @@ def paragraph_dedup_rebuild(
     (groupBy(fp) + min(struct) first-occurrence, never a window over a
     hot fingerprint); first occurrence orders by (doc_id, para_idx) with
     string doc_ids comparing lexicographically — matching the SQL twin's
-    ORDER BY."""
+    ORDER BY.
+
+    ``seen`` (fp): paragraph md5s already kept elsewhere (an incremental
+    run's corpus paragraph index) — those paragraphs drop before the
+    first-occurrence pick, co-partitioned with it on fp."""
     parts = df.sparkSession.sparkContext.defaultParallelism * 2
     # same r7 derivation shape as paragraph_dedup: spread the raw rows
     # first, outer-explode so no derived-size guard reaches the scan
@@ -839,6 +847,8 @@ def paragraph_dedup_rebuild(
         )
         .repartition(parts, "fp")
     )
+    if seen is not None:
+        p = p.join(seen, "fp", "left_anti")
     first = p.groupBy("fp").agg(
         F.min(F.struct("doc_id", "para_idx")).alias("first_occ")
     )
@@ -945,19 +955,6 @@ def substring_dedup_stats(
             "CAST(CASE WHEN n_tokens > 0 THEN (coalesce(n_dup_tokens, 0) * 1000) "
             "DIV n_tokens ELSE 0 END AS BIGINT)"
         ).alias("dup_ratio_x1000"),
-    )
-
-
-def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Exact dedup via fingerprint groupBy: groups with >1 member,
-    returning (fingerprint, n_dups, keep_id = min id)."""
-    from .textops import fingerprint
-
-    return (
-        df.select(F.col(id_col).alias("id"), fingerprint(F.col(text_col)).alias("fp"))
-        .groupBy("fp")
-        .agg(F.count("*").alias("n_dups"), F.min("id").alias("keep_id"))
-        .where(F.col("n_dups") > 1)
     )
 
 

@@ -268,17 +268,6 @@ def fit_centroids_spark(
     return kmeans_centroids([r[0] for r in rows], n_cells)
 
 
-def cell_assign(vec_col, centroids: list[list[float]]):
-    """argmax-dot cell over explicit centroid literals (first max wins —
-    same tie rule as numpy argmax and DuckDB list_position). Centroids
-    are unit vectors (spherical fit), so this is argmax-cosine without
-    needing to normalize the corpus vectors."""
-    dots = F.array(
-        *[dot(vec_col, F.array([F.lit(v) for v in c]), len(c)) for c in centroids]
-    )
-    return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
-
-
 def probe_cells(vec_col, centroids: list[list[float]], nprobe: int):
     """The nprobe nearest cells for a query (by dot, descending; ties by
     cell index). array<int> of length min(nprobe, n_cells)."""

@@ -85,8 +85,8 @@ def _scrub(text):
 
 def _gate_frames(base: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The stateless per-document gates (quality, repetition, PII scrub)
-    — shared verbatim by the batch funnel and the incremental form,
-    because per-doc gates are trivially incremental."""
+    — trivially incremental, so the indexed funnel runs them unchanged
+    on the batch alone."""
     ws = TX.words(F.col("text"))
     m = base.select(
         "doc_id",
@@ -105,7 +105,10 @@ def _gate_frames(base: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
 
 
 def corpus_stages(
-    doc_text: DataFrame, stage_checkpoints: bool = True
+    doc_text: DataFrame,
+    stage_checkpoints: bool = True,
+    indexes: tuple[DataFrame, DataFrame, DataFrame] | None = None,
+    eval_doc_text: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """All funnel stages as (doc_id, ...) frames over a (doc_id, text)
     corpus. ``doc_text`` is localCheckpoint'ed so upstream derivation
@@ -119,7 +122,16 @@ def corpus_stages(
     90s -> ~40s at sf0.1 for the full funnel). This is exactly what a
     production multi-stage pipeline does between stages (persist the
     survivor set); pass False to get the single fully-lazy composed plan
-    (what scripts/explain_audit.py pins invariants on)."""
+    (what scripts/explain_audit.py pins invariants on).
+
+    ``indexes`` makes this the INCREMENTAL funnel: the (fp_index(fp),
+    para_index(fp), band_index(band)) probe indexes funnel_probe_indexes
+    derives from an already-processed corpus, so each dedup stage also
+    drops what that corpus holds (semantics on incremental_batch_stages).
+    A full run is the no-index case, and then no probe enters the plan.
+    ``eval_doc_text`` is the (doc_id, text) decontamination set; the
+    default is every EVAL_MOD-th document of this input."""
+    fp_index, para_index, band_index = indexes or (None, None, None)
     base = doc_text.select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
     ).localCheckpoint(eager=True)
@@ -132,24 +144,40 @@ def corpus_stages(
     # exact dedup first (cheapest): min doc_id per fingerprint keeps
     fpf = scrubbed.select("doc_id", "text", TX.fingerprint(F.col("text")).alias("fp"))
     first = fpf.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))
-    s3 = stage(
-        fpf.join(first, "fp")
-        .where(F.col("doc_id") == F.col("keep_id"))
-        .select("doc_id", "text")
-    )
+    exact = fpf.join(first, "fp").where(F.col("doc_id") == F.col("keep_id"))
+    if fp_index is not None:
+        exact = exact.join(fp_index, "fp", "left_anti")
+    s3 = stage(exact.select("doc_id", "text"))
 
-    s4 = stage(DF.paragraph_dedup_rebuild(s3, "doc_id", "text", size=4))
+    s4 = stage(
+        DF.paragraph_dedup_rebuild(s3, "doc_id", "text", size=4, seen=para_index)
+    )
 
     pairs = DF.lsh_candidate_pairs(s4, "doc_id", "text")
     comp = DF.neardup_components(pairs).withColumnRenamed("id", "doc_id")
+    labeled = s4.join(comp, "doc_id", "left")
+    if band_index is not None:
+        # a component is corpus-adjacent iff ANY member's band keys hit
+        # the corpus band index: drop it whole (a full re-run would join
+        # it to the corpus doc, which then represents it)
+        labeled = labeled.withColumn("comp", F.coalesce("comp", "doc_id"))
+        hits = s4.select(
+            "doc_id",
+            # band_keys is a fixed non-empty array: outer = same rows
+            F.explode_outer(DF.band_keys(DF.minhash_signature(F.col("text")))).alias(
+                "band"
+            ),
+        ).join(band_index, "band", "left_semi")
+        bad_comp = labeled.join(hits, "doc_id", "left_semi").select("comp")
+        labeled = labeled.join(bad_comp, "comp", "left_anti")
     s5 = stage(
-        s4.join(comp, "doc_id", "left")
-        .where(F.col("comp").isNull() | (F.col("comp") == F.col("doc_id")))
+        labeled.where(F.col("comp").isNull() | (F.col("comp") == F.col("doc_id")))
         .select("doc_id", "text")
     )
 
-    ev = base.where(F.col("doc_id").cast("bigint") % EVAL_MOD == 0)
-    dc = DF.decontam_flags_join(s5, "doc_id", "text", ev, threshold_x1000=500)
+    if eval_doc_text is None:
+        eval_doc_text = base.where(F.col("doc_id").cast("bigint") % EVAL_MOD == 0)
+    dc = DF.decontam_flags_join(s5, "doc_id", "text", eval_doc_text, threshold_x1000=500)
     s6 = stage(
         s5.join(
             dc.where(F.col("contaminated") == 0).select(F.col("id").alias("doc_id")),
@@ -214,28 +242,23 @@ def funnel_probe_indexes(
       shares its md5 with a kept one, so kept-para md5s cover all);
     - band_index(band): LSH band keys of every doc that reached the
       near-dup stage (a doc dropped there still blocks new copies)."""
-    from ..operators.dedup_fuzzy import (
-        band_keys,
-        hashed_shingles,
-        paragraphs,
-        signature_from_hashed,
-    )
-
     fp_index = stages["exact_dedup"].select(
         TX.fingerprint(F.col("text")).alias("fp")
     )
     para_index = (
         stages["paragraph_dedup"]
-        .select(F.explode(paragraphs(F.col("text"), 4)).alias("para"))
+        # paragraphs builds on sequence(0, greatest(.., 0)): never empty, outer = same rows
+        .select(F.explode_outer(DF.paragraphs(F.col("text"), 4)).alias("para"))
         .where(F.col("para") != "")
         .select(F.md5(F.lower(F.col("para"))).alias("fp"))
     )
     band_index = (
         stages["paragraph_dedup"]
         .select(
-            F.explode(
-                band_keys(signature_from_hashed(hashed_shingles(F.col("text"))))
-            ).alias("band")
+            # band_keys is a fixed non-empty array: outer = same rows
+            F.explode_outer(DF.band_keys(DF.minhash_signature(F.col("text")))).alias(
+                "band"
+            )
         )
         .distinct()
     )
@@ -254,17 +277,11 @@ def incremental_batch_stages(
     shape incremental_dedup_status (q52) exists for.
 
     Indexes (in production: persisted bucketed tables appended per
-    batch; here derived from the corpus funnel, which IS the index
-    build):
-    - exact-fp index: fingerprints of the corpus' exact-dedup survivors
-      (one survivor per fp, so the survivor fps are ALL corpus fps);
-    - paragraph-fp index: md5 of the kept paragraphs (dropped corpus
-      paras share an md5 with a kept one, so kept-para md5s cover all);
-    - LSH band index: band keys of every doc that REACHED the corpus'
-      near-dup stage (pre-neardup survivors — a corpus doc dropped as a
-      near-dup still blocks new copies of itself).
+    batch, as streaming_corpus_funnel keeps them; here derived by
+    funnel_probe_indexes from the corpus funnel, which IS the index
+    build).
 
-    Batch semantics, stage by stage:
+    Batch semantics, stage by stage (corpus_stages with ``indexes``):
     - per-doc gates: stateless, run on the batch alone (_gate_frames);
     - exact dedup: within-batch first-wins, then drop fps already in
       the corpus index;
@@ -285,184 +302,35 @@ def incremental_batch_stages(
     the batch's surviving set equals (full re-run over corpus UNION
     batch) ∩ batch, PROVIDED corpus doc_ids order before batch doc_ids
     (ingest order — earlier data wins every first-occurrence
-    tie-break, which is exactly how production assigns ids). NB (round-6
-    ADVICE): the ordering is lexicographic STRING order — doc_id is cast
-    to string on both sides and every min()/first-occurrence tie-break
-    compares strings — so numeric ids of differing width violate the
-    precondition silently ('9' > '10' as strings). Use zero-padded or
-    otherwise fixed-width ids, or compare max(corpus id) < min(batch id)
-    AS STRINGS before relying on the contract.
+    tie-break, which is exactly how production assigns ids). The
+    ordering is lexicographic STRING order — doc_id is cast to string
+    on both sides and every min()/first-occurrence tie-break compares
+    strings ('9' > '10') — so this raises ValueError unless max(corpus
+    id) < min(batch id) as strings (one small aggregate job).
 
     Returns the batch-side stage frames under the corpus_stages keys
     (counts comparable to a batch funnel) plus 'corpus_input'."""
-    corpus = corpus_stages(corpus_doc_text, stage_checkpoints=stage_checkpoints)
-    fp_index, para_index, band_index = funnel_probe_indexes(corpus)
     cast = lambda d: d.select(  # noqa: E731
         F.col("doc_id").cast("string").alias("doc_id"), "text"
     )
-    ev = (
-        cast(corpus_doc_text)
-        .unionByName(cast(batch_doc_text))
-        .where(F.col("doc_id").cast("bigint") % EVAL_MOD == 0)
-    )
-    out = incremental_batch_stages_vs_indexes(
+    c, b = cast(corpus_doc_text), cast(batch_doc_text)
+    hi, lo = c.agg(F.max("doc_id")).crossJoin(b.agg(F.min("doc_id"))).first()
+    if hi is not None and lo is not None and hi >= lo:
+        raise ValueError(
+            f"incremental funnel needs corpus ids < batch ids as strings; "
+            f"max corpus doc_id {hi!r} >= min batch doc_id {lo!r}"
+        )
+    corpus = corpus_stages(corpus_doc_text, stage_checkpoints=stage_checkpoints)
+    out = corpus_stages(
         batch_doc_text,
-        fp_index,
-        para_index,
-        band_index,
-        ev,
         stage_checkpoints=stage_checkpoints,
+        indexes=funnel_probe_indexes(corpus),
+        eval_doc_text=c.unionByName(b).where(
+            F.col("doc_id").cast("bigint") % EVAL_MOD == 0
+        ),
     )
     out["corpus_input"] = corpus["input"]
     return out
-
-
-def incremental_batch_stages_vs_indexes(
-    batch_doc_text: DataFrame,
-    fp_index: DataFrame,
-    para_index: DataFrame,
-    band_index: DataFrame,
-    eval_doc_text: DataFrame,
-    stage_checkpoints: bool = True,
-) -> dict[str, DataFrame]:
-    """Core of the incremental funnel, taking the three probe indexes
-    DIRECTLY (fp_index(fp), para_index(fp), band_index(band)) plus the
-    eval stand-in frame — the form the STREAMING pipeline drives, where
-    the indexes are persisted tables appended per processed batch
-    (funnel_probe_indexes of each batch's own stages) rather than
-    re-derived from a corpus funnel. O(batch + index probes) per call;
-    semantics documented on incremental_batch_stages."""
-    from ..operators.dedup_fuzzy import (
-        band_keys,
-        hashed_shingles,
-        lsh_candidate_pairs,
-        neardup_components,
-        paragraphs,
-        signature_from_hashed,
-    )
-
-    base = batch_doc_text.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).localCheckpoint(eager=True)
-
-    def stage(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=True) if stage_checkpoints else df
-
-    s1, s2, scrubbed = _gate_frames(base)
-
-    # ---- exact dedup: within-batch first-wins + corpus fp probe ----
-    bfp = scrubbed.select(
-        "doc_id", "text", TX.fingerprint(F.col("text")).alias("fp")
-    )
-    b_first = bfp.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))
-    s3 = stage(
-        bfp.join(b_first, "fp")
-        .where(F.col("doc_id") == F.col("keep_id"))
-        .join(fp_index, "fp", "left_anti")
-        .select("doc_id", "text")
-    )
-
-    # ---- paragraph dedup: corpus para-fp probe + within-batch ----
-    parts = base.sparkSession.sparkContext.defaultParallelism * 2
-    p = (
-        s3.select(
-            "doc_id",
-            F.posexplode(paragraphs(F.col("text"), 4)).alias("para_idx", "para"),
-        )
-        .where(F.col("para") != "")
-        .select(
-            "doc_id",
-            F.col("para_idx").cast("long").alias("para_idx"),
-            "para",
-            F.md5(F.lower(F.col("para"))).alias("fp"),
-        )
-        .repartition(parts, "fp")
-        .join(para_index, "fp", "left_anti")
-    )
-    p_first = p.groupBy("fp").agg(
-        F.min(F.struct("doc_id", "para_idx")).alias("first_occ")
-    )
-    kept = p.join(p_first, "fp").where(
-        (F.col("doc_id") == F.col("first_occ.doc_id"))
-        & (F.col("para_idx") == F.col("first_occ.para_idx"))
-    )
-    s4 = stage(
-        kept.groupBy("doc_id").agg(
-            F.array_join(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("para_idx", "para"))),
-                    lambda s: s["para"],
-                ),
-                " ",
-            ).alias("text")
-        )
-    )
-
-    # ---- near-dup: within-batch components + corpus band probe ----
-    b_bands = s4.select(
-        "doc_id",
-        F.explode(
-            band_keys(signature_from_hashed(hashed_shingles(F.col("text"))))
-        ).alias("band"),
-    )
-    near_c = (
-        b_bands.join(band_index, "band", "left_semi")
-        .select("doc_id")
-        .distinct()
-        .withColumn("_near_c", F.lit(1))
-    )
-    comp = neardup_components(
-        lsh_candidate_pairs(s4, "doc_id", "text")
-    ).withColumnRenamed("id", "doc_id")
-    labeled = (
-        s4.join(comp, "doc_id", "left")
-        .join(near_c, "doc_id", "left")
-        .select(
-            "doc_id",
-            "text",
-            F.coalesce(F.col("comp"), F.col("doc_id")).alias("comp"),
-            F.coalesce(F.col("_near_c"), F.lit(0)).alias("_near_c"),
-        )
-    )
-    # a component is corpus-adjacent iff ANY member collides with the
-    # corpus band index — drop it whole (bounded aggregate per comp)
-    bad_comp = (
-        labeled.groupBy("comp")
-        .agg(F.max("_near_c").alias("_bad"))
-        .where(F.col("_bad") == 1)
-        .select("comp")
-    )
-    s5 = stage(
-        labeled.join(bad_comp, "comp", "left_anti")
-        .where(F.col("comp") == F.col("doc_id"))
-        .select("doc_id", "text")
-    )
-
-    # ---- decontam (fixed external eval stand-in) + stratified sample ----
-    dc = DF.decontam_flags_join(
-        s5, "doc_id", "text", eval_doc_text, threshold_x1000=500
-    )
-    s6 = stage(
-        s5.join(
-            dc.where(F.col("contaminated") == 0).select(F.col("id").alias("doc_id")),
-            "doc_id",
-            "left_semi",
-        )
-    )
-    s7 = TX.stratified_sample(
-        s6, "doc_id", TX.lang_id(F.col("text")), SAMPLE_RATES, SAMPLE_DEFAULT
-    )
-
-    return {
-        "input": base,
-        "quality_gate": s1,
-        "repetition_gate": s2,
-        "exact_dedup": s3,
-        "paragraph_dedup": s4,
-        "neardup_dedup": s5,
-        "decontam": s6,
-        "stratified_sample": s7,
-    }
 
 
 ASSEMBLY_BUDGET = 50_000  # token budget for the selection stage

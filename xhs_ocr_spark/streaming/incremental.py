@@ -209,10 +209,10 @@ def streaming_corpus_funnel(
 ) -> DataStreamWriter:
     """The incremental corpus funnel as a STREAM: micro-batches of
     (doc_id, text) documents arrive as parquet files; each batch runs
-    plans.corpus_pipeline.incremental_batch_stages_vs_indexes against
-    three persisted probe indexes under ``state_dir`` (fp/, para/,
-    band/ — appended with every processed batch's own
-    funnel_probe_indexes delta), and the batch's surviving documents
+    plans.corpus_pipeline.corpus_stages with ``indexes`` set to three
+    persisted probe indexes under ``state_dir`` (fp/, para/, band/ —
+    appended with every processed batch's own funnel_probe_indexes
+    delta), and the batch's surviving documents
     land in ``state_dir``/survivors. This is the steady-state
     production loop: the corpus grows batch by batch, each batch dedups
     against EVERYTHING processed before it at O(batch + probes), and
@@ -241,10 +241,7 @@ def streaming_corpus_funnel(
       state, batch input), which makes overwrite-replay exactly-once
       end to end. A real Iceberg deployment gets the same guarantee
       from transactional multi-table commits (COVERAGE.md K2-K4)."""
-    from ..plans.corpus_pipeline import (
-        funnel_probe_indexes,
-        incremental_batch_stages_vs_indexes,
-    )
+    from ..plans.corpus_pipeline import corpus_stages, funnel_probe_indexes
 
     def _committed_dirs(path: str, exclude_batch: int) -> list[str]:
         import os as _os
@@ -271,8 +268,8 @@ def streaming_corpus_funnel(
         fp_i = _read_committed(f"{state_dir}/fp", "fp string", batch_id)
         para_i = _read_committed(f"{state_dir}/para", "fp string", batch_id)
         band_i = _read_committed(f"{state_dir}/band", "band string", batch_id)
-        stages = incremental_batch_stages_vs_indexes(
-            batch_df, fp_i, para_i, band_i, eval_doc_text
+        stages = corpus_stages(
+            batch_df, indexes=(fp_i, para_i, band_i), eval_doc_text=eval_doc_text
         )
         survivors = stages["decontam"].join(
             stages["stratified_sample"].select("doc_id"), "doc_id", "left_semi"
