@@ -17,4 +17,8 @@ No code is copied from the reference; file:line citations in docstrings point
 at the behavior being re-implemented.
 """
 
+from . import worker_bootstrap
+
+worker_bootstrap.install()
+
 __version__ = "0.1.0"

@@ -36,7 +36,7 @@ both the fastest measured shape AND structurally single-scan.
 
 Shuffles: exactly 2 (the span spread and the final group-by-doc);
 parquet is scanned exactly once and exactly one python stage exists
-(both pinned by scripts/explain_audit.py).
+(all three pinned by scripts/explain_audit.py's flagship entries).
 """
 
 from __future__ import annotations

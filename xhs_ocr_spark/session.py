@@ -10,6 +10,7 @@ Defaults chosen for the 100 TB design point and safe on local[N]:
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -65,13 +66,24 @@ def package_zip(dest_dir: str | None = None) -> str:
 
     Returns the zip path. Used both by the session factory (addPyFile, so
     executor python workers can unpickle our UDF closures regardless of the
-    driver's cwd) and by scripts/build_pyfiles_zip.sh.
+    driver's cwd) and by scripts/build_pyfiles_zip.sh. Without ``dest_dir``
+    the zip goes to a fresh temp dir removed when this process exits (Spark
+    serves executors from that file until then).
     """
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out_dir = dest_dir or tempfile.mkdtemp(prefix="xhs_ocr_spark_pyfiles_")
+    out_dir = dest_dir
+    if not out_dir:
+        out_dir = tempfile.mkdtemp(prefix="xhs_ocr_spark_pyfiles_")
+        atexit.register(_remove_if_owner, out_dir, os.getpid())
     base = os.path.join(out_dir, "xhs_ocr_spark")
     # archive rooted one level up so the zip contains xhs_ocr_spark/...
     return shutil.make_archive(base, "zip", os.path.dirname(pkg_dir), "xhs_ocr_spark")
+
+
+def _remove_if_owner(path: str, pid: int) -> None:
+    # a forked child that exits through atexit must not delete its parent's dir
+    if os.getpid() == pid:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def ship_package(spark: SparkSession) -> None:
